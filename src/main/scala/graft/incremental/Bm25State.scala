@@ -288,7 +288,7 @@ final class MultiBm25State(emptyPosting: ZSetFrame,
       - ZSetFrame.fromTable(oldScores)).consolidate.localCheckpoint()
     // two-level top-k, level 1: per-(query, bucket) winners for exactly
     // the touched buckets — O(touched bucket rows)
-    val bEx = pmod(hash(col("doc_id")), lit(nBuckets))
+    val bEx = KeyedState.bucketOf(Seq(col("doc_id")), nBuckets)
     val newBT = (scoreIdx.view(affB) + scDelta).consolidate.df
       .select("query_id", "doc_id", "score_q")
       .withColumn("rn", row_number().over(
@@ -417,7 +417,7 @@ final class MultiBm25State(emptyPosting: ZSetFrame,
           lit(nDocs), lit(tToks), grid).as("sq"))
       .groupBy("query_id", "doc_id").agg(sum(col("sq")).as("score_q"))
     scoreIdx.merge(ZSetFrame.fromTable(newScores), knownTouched = all)
-    val bEx = pmod(hash(col("doc_id")), lit(nBuckets))
+    val bEx = KeyedState.bucketOf(Seq(col("doc_id")), nBuckets)
     val newBT = scoreIdx.view(0 until nBuckets).consolidate.df
       .select("query_id", "doc_id", "score_q")
       .withColumn("rn", row_number().over(

@@ -15,11 +15,11 @@ import graft.core.ZSetFrame
   * persisted to RocksDB and the circuit recovers from it after a restart).
   *
   * Layout: a parquet table at `path`, partitioned by the `__bucket` column
-  * (= `pmod(hash(keys), nBuckets)`, the same bucket function KeyedState
-  * uses). A merge step reads ONLY the touched buckets (partition pruning on
-  * the `__bucket` filter reaches the file listing — untouched buckets' files
-  * are never opened) and writes back ONLY those buckets via dynamic
-  * partition overwrite. On a cluster this is exactly the bucketed state
+  * (= `KeyedState.bucketOf(keys, nBuckets)`, the same bucket function
+  * KeyedState uses). A merge step reads ONLY the touched buckets
+  * (partition pruning on the `__bucket` filter reaches the file listing —
+  * untouched buckets' files are never opened) and writes back ONLY those
+  * buckets via dynamic partition overwrite. On a cluster this is exactly the bucketed state
   * table the in-memory KeyedState scaladoc promises: state survives a
   * driver restart, and `restore(spark, path)` re-attaches to it — schema,
   * keys, and bucket count are recorded in a `_graft_state.txt` sidecar (an
@@ -52,7 +52,7 @@ final class DurableKeyedState private (
   private var liveBuckets: Set[Int] = initialLive
 
   private def keyExprs: Seq[Column] = keys.map(col)
-  def bucketId: Column = pmod(hash(keyExprs: _*), lit(nBuckets))
+  def bucketId: Column = KeyedState.bucketOf(keyExprs, nBuckets)
 
   /** The state table with its partition column, restricted to the
     * COMMITTED live buckets. An explicit schema makes an empty directory
@@ -62,7 +62,7 @@ final class DurableKeyedState private (
 
   /** Bucket ids a delta's keys hash into (one small job). */
   def touchedBuckets(delta: ZSetFrame): Seq[Int] =
-    delta.df.select(pmod(hash(keys.map(delta.df(_)): _*), lit(nBuckets)).as("b"))
+    delta.df.select(KeyedState.bucketOf(keys.map(delta.df(_)), nBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
 
   /** Partition-pruned read of the given buckets (file-skipping scan). */
@@ -174,7 +174,7 @@ object DurableKeyedState {
     val df = init.consolidate.df.select(colsInOrder.map(col): _*)
     val schema = df.schema
     val bucketed = df.withColumn("__bucket",
-      pmod(hash(keys.map(col): _*), lit(nBuckets))).localCheckpoint(true)
+      KeyedState.bucketOf(keys.map(col), nBuckets)).localCheckpoint(true)
     val live = bucketed.select("__bucket").distinct()
       .collect().map(_.getInt(0)).toSet
     val st = new DurableKeyedState(spark, keys, nBuckets, path, schema, live)

@@ -101,7 +101,7 @@ object Incremental {
       // merges run on a side thread concurrent with the single output action.
       val aOldProbe = aSt.view(bTouched)
       val dAInB = pinA.where(
-        pmod(hash(keys.map(col): _*), lit(aSt.nBuckets)).isin(bTouched: _*))
+        KeyedState.bucketOf(keys.map(col), aSt.nBuckets).isin(bTouched: _*))
       val aNewProbe = aOldProbe + dAInB
       val mergeTask = new java.util.concurrent.FutureTask[Unit](() => {
         aSt.merge(pinA, checkpointDelta = false, Some(aTouched))

@@ -66,7 +66,7 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
 
   /** Logical bucket of a row — equals the physical partition id assigned by
     * `repartition(nBuckets, keys)` (HashPartitioning.partitionIdExpression). */
-  def bucketId: Column = pmod(hash(keyExprs: _*), lit(nBuckets))
+  def bucketId: Column = KeyedState.bucketOf(keyExprs, nBuckets)
 
   /** `index`: for a TOUCHED-PRUNED segment (see `materializeBucketed`),
     * the bucket-id → physical-partition-index map; `None` means physical
@@ -106,7 +106,7 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
 
   /** REPLACE `bucketIds`' lists with `seg`, maintaining refcounts; segments
     * whose last bucket moved away are queued for deferred unpersist. */
-  private def install(seg: Segment, bucketIds: Seq[Int]): Unit =
+  private def install(seg: Segment, bucketIds: Seq[Int]): Unit = {
     bucketIds.foreach { b =>
       bucketSegs(b).foreach { old =>
         if (old ne seg) {
@@ -117,13 +117,24 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
       if (!bucketSegs(b).contains(seg)) seg.refs += 1
       bucketSegs(b) = List(seg)
     }
+    retireIfUnreferenced(seg)
+  }
 
   /** PREPEND `seg` to `bucketIds`' lists (spine append — old segments stay). */
-  private def installAppend(seg: Segment, bucketIds: Seq[Int]): Unit =
+  private def installAppend(seg: Segment, bucketIds: Seq[Int]): Unit = {
     bucketIds.foreach { b =>
       seg.refs += 1
       bucketSegs(b) = seg :: bucketSegs(b)
     }
+    retireIfUnreferenced(seg)
+  }
+
+  /** A segment built for an EMPTY touched span is pinned (a 0-partition
+    * checkpoint) but listed under no bucket, so neither a later install nor
+    * `close` would ever see it: queue it like any superseded segment (views
+    * of this step may still name it until the deferred release). */
+  private def retireIfUnreferenced(seg: Segment): Unit =
+    if (seg.refs == 0) retireQ.retire(seg)
 
   /** The RDD handle we keep (`df.rdd`) is a row-conversion CHILD of the
     * internally persisted checkpoint RDD — unpersist the persisted ancestor,
@@ -327,7 +338,7 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     * same-shaped states: any KeyedState with equal `keys` and `nBuckets`
     * assigns identical ids. */
   def touchedBuckets(delta: ZSetFrame): Seq[Int] =
-    delta.df.select(pmod(hash(keys.map(delta.df(_)): _*), lit(nBuckets)).as("b"))
+    delta.df.select(KeyedState.bucketOf(keys.map(delta.df(_)), nBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
 
   /** Partition-pruned read of the given buckets (no job launched). */
@@ -587,6 +598,15 @@ object KeyedState {
     * `knownTouched` is a superset of the delta's actual bucket span
     * (the same contract-check philosophy as ZSetFrame.CheckedWeightsConf). */
   val CheckedTouchedConf = "spark.graft.checkedTouched"
+
+  /** THE bucket-id expression of every key-partitioned trace: the SQL
+    * `hash()` (murmur3, seed 42) of the key columns, positive mod
+    * `nBuckets` — the partition id `repartition(nBuckets, keys)` assigns
+    * (HashPartitioning.partitionIdExpression). Every cluster-side bucket
+    * computation routes through here; `bucketOfLongs`/`bucketOfString`
+    * below are its driver-side mirrors. */
+  def bucketOf(keys: Seq[Column], nBuckets: Int): Column =
+    pmod(hash(keys: _*), lit(nBuckets))
 
   /** DRIVER-SIDE bucket id for a row of Long key values — exactly what
     * `repartition(n, keys)` computes for LongType key columns: murmur3

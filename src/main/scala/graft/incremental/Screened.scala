@@ -29,7 +29,7 @@ private[incremental] object Screened {
     val obs = new Observation()
     val affected = screened.union(deltaKeys).distinct()
       .observe(obs, collect_set(
-        pmod(hash(col(key)), lit(nBuckets))).as("bks"))
+        KeyedState.bucketOf(Seq(col(key)), nBuckets)).as("bks"))
       .localCheckpoint(true)
     (affected, obs.get("bks").asInstanceOf[Seq[Int]].sorted)
   }
@@ -79,7 +79,7 @@ private[incremental] object Screened {
       (ZSetFrame.fromTable(newRows) - ZSetFrame.fromTable(oldRows))
         .consolidate.df
         .observe(obs, collect_set(
-          pmod(hash(col(key)), lit(nBuckets))).as("bks"))
+          KeyedState.bucketOf(Seq(col(key)), nBuckets)).as("bks"))
         .localCheckpoint(true))
     (out, obs.get("bks").asInstanceOf[Seq[Int]].sorted)
   }

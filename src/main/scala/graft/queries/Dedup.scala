@@ -458,7 +458,8 @@ object Dedup extends QueryModule {
       // routing shuffle plus the output action, nothing else.
       val batchBuckets: Map[Int, Seq[Int]] = gramRows(base)
         .select(pmod(col("doc_id"), lit(K)).cast("int").as("batch"),
-          pmod(hash(col("gh")), lit(st.nBuckets)).as("b"))
+          graft.incremental.KeyedState.bucketOf(Seq(col("gh")), st.nBuckets)
+            .as("b"))
         .distinct().collect()
         .groupBy(_.getInt(0))
         .map { case (i, rows) => i -> rows.map(_.getInt(1)).toSeq.distinct.sorted }

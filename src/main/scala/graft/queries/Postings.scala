@@ -206,6 +206,11 @@ object Postings {
     filtered.groupBy(gcols.map(col): _*).agg(count(lit(1)).as("tf"))
   }
 
+  /** `build`'s posting columns in the screened states' order:
+    * (doc_id, term, tf[, dl]). */
+  def postingCols(withDl: Boolean): Seq[Column] =
+    (Seq("doc_id", "term", "tf") ++ (if (withDl) Seq("dl") else Nil)).map(col)
+
   /** The corpus constants of the BM25 surrogate — N docs and T total
     * tokens — over the (possibly restricted) documents frame; broadcast by
     * callers. Matches the `consts` CTE of `bm25Top10OracleSql`. */

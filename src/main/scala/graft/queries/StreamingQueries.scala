@@ -4,7 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.core.Tables
+import graft.core.{Tables, ZSetFrame}
+import graft.incremental.{Bm25State, CosineState, MultiBm25State, PmiState,
+  TfIdfState}
 import graft.streaming.{KvDelta, StreamOps, UpsertCmd}
 
 /** Structured Streaming runs surfaced through the batch oracle gate: each
@@ -18,6 +20,29 @@ object StreamingQueries extends QueryModule {
     * the flush sentinel's event time. */
   private val FlushNanos = 1717200000L * 1000000000L
 
+  /** Delete a directory tree (children before parents); a missing root is
+    * a no-op. The walk stream is closed on every path. */
+  private[queries] def deleteTree(p: java.nio.file.Path): Unit = {
+    import java.nio.file.{Files, Path}
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(Files.deleteIfExists(_))
+      finally walk.close()
+    }
+  }
+
+  /** The single parquet part file in `dir` — the output of a one-task
+    * write; fails naming `dir` when there is none. */
+  private def singlePart(dir: java.nio.file.Path): java.nio.file.Path = {
+    val l = java.nio.file.Files.list(dir)
+    try {
+      val f = l.filter(_.toString.endsWith(".parquet")).findFirst()
+      if (f.isPresent) f.get()
+      else sys.error(s"graft: no parquet part file in $dir")
+    } finally l.close()
+  }
+
   /** Delete superseded staged generations (ADVICE r7): staged dirs are
     * keyed on the source file's mtime, so a testdata regeneration strands
     * every prior generation — same tag/dir prefix+suffix, different stamp —
@@ -26,13 +51,7 @@ object StreamingQueries extends QueryModule {
     * (same-stamp debris is handled by the publish path's own sweep). */
   private def gcStaleStaged(staged: java.nio.file.Path, pre: String,
                             suf: String): Unit = {
-    import java.nio.file.{Files, Path}
-    def deleteTree(p: Path): Unit = if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(Files.deleteIfExists(_))
-      finally walk.close()
-    }
+    import java.nio.file.Files
     val cur = staged.getFileName.toString
     val cutoff = System.currentTimeMillis() - 60000L
     val sibs = Files.list(staged.getParent)
@@ -57,7 +76,7 @@ object StreamingQueries extends QueryModule {
     * queries. */
   private[graft] def stageDir(s: SparkSession, dir: String, tag: String,
                                 sentinel: Boolean): String = {
-    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths, StandardCopyOption}
     // the source file's mtime is part of the staged-dir identity: if the
     // driver regenerates the testdata (new schema/values), the old staged
     // dir — including a sentinel written against the OLD schema — must not
@@ -72,12 +91,6 @@ object StreamingQueries extends QueryModule {
     // being served incomplete (empty streams + confusing oracle failures).
     val marker =
       staged.resolve(if (sentinel) "zz_flush.parquet" else "events.parquet")
-    def deleteTree(p: Path): Unit = if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(Files.deleteIfExists(_))
-      finally walk.close()
-    }
     if (!Files.exists(marker)) {
       gcStaleStaged(staged, s"graft_stream_${tag}_",
         "_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
@@ -125,11 +138,7 @@ object StreamingQueries extends QueryModule {
             lit(0.0).as("value"), lit("").as("props")))
         val tmp = build.resolveSibling(build.getFileName.toString + "_pq")
         one.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val listing = Files.list(tmp)
-        val part = try listing.filter(_.toString.endsWith(".parquet"))
-          .findFirst().get()
-        finally listing.close()
-        Files.move(part, build.resolve("zz_flush.parquet"),
+        Files.move(singlePart(tmp), build.resolve("zz_flush.parquet"),
           StandardCopyOption.REPLACE_EXISTING)
         deleteTree(tmp)
       }
@@ -166,9 +175,9 @@ object StreamingQueries extends QueryModule {
     * key-mod splits (q65/q66 arrival batches) or TIME slices (q87's
     * in-order CDC replay, where ascending file mtimes make the file source
     * deliver batches in event-time order). `xform` reshapes the table
-    * BEFORE slicing (default identity) — q88 uses it to append a
-    * retraction slice (the same rows again with weight −1), which a pure
-    * row→slice map cannot express. */
+    * BEFORE slicing (default identity) — the screened family's CDC script
+    * (CdcReplay.Full) uses it to append a retraction slice (the same rows
+    * again with weight −1), which a pure row→slice map cannot express. */
   private[graft] def stageSlicedDir(s: SparkSession, dir: String,
                                     table: String, tag: String, k: Int,
                                     sliceOf: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Column,
@@ -179,12 +188,6 @@ object StreamingQueries extends QueryModule {
     val staged = Paths.get(
       s"/tmp/graft_stream_${tag}_${stamp}_${dir.replaceAll("[^A-Za-z0-9]", "_")}")
     val marker = staged.resolve(s"b${k - 1}.parquet")
-    def deleteTree(p: Path): Unit = if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(Files.deleteIfExists(_))
-      finally walk.close()
-    }
     if (!Files.exists(marker)) {
       gcStaleStaged(staged, s"graft_stream_${tag}_",
         "_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
@@ -214,9 +217,7 @@ object StreamingQueries extends QueryModule {
         val te = build.resolve("tmpempty")
         docs.where(lit(false)).coalesce(1).write.mode("overwrite")
           .parquet(te.toString)
-        val l = Files.list(te)
-        val p = try l.filter(_.toString.endsWith(".parquet")).findFirst().get()
-        finally l.close()
+        val p = singlePart(te)
         emptyTemplate = Some(p); p
       }
       // Rename each slice's part file to b$i.parquet with EXPLICIT strictly
@@ -228,13 +229,8 @@ object StreamingQueries extends QueryModule {
       for (i <- 0 until k) {
         val pdir = tmp.resolve(s"__slice=$i")
         val target = build.resolve(s"b$i.parquet")
-        val part: Option[Path] = if (Files.isDirectory(pdir)) {
-          val l = Files.list(pdir)
-          try {
-            val f = l.filter(_.toString.endsWith(".parquet")).findFirst()
-            if (f.isPresent) Some(f.get()) else None
-          } finally l.close()
-        } else None
+        val part =
+          if (Files.isDirectory(pdir)) Some(singlePart(pdir)) else None
         part match {
           case Some(p) => Files.move(p, target,
             StandardCopyOption.REPLACE_EXISTING)
@@ -259,12 +255,12 @@ object StreamingQueries extends QueryModule {
   }
 
   /** THE exception-safe drive for the stateful foreachBatch queries
-    * (q87–q90) — one owner for the lifecycle whose fixes kept landing
-    * per-copy while it was hand-written at each site (VERDICT r14 #1; the
-    * r13 ADVICE checkpoint-leak fix touched all three copies): create a
-    * /tmp checkpoint dir, run `src` through a checkpointed foreachBatch
-    * feeding each NON-EMPTY micro-batch to `onBatch`, force `result`
-    * before teardown, and delete the ck tree on every exit path.
+    * (q65–q66, q87–q93) — one owner for the lifecycle whose fixes kept
+    * landing per-copy while it was hand-written at each site (VERDICT r14
+    * #1; the r13 ADVICE checkpoint-leak fix touched all three copies):
+    * create a /tmp checkpoint dir, run `src` through a checkpointed
+    * foreachBatch feeding each NON-EMPTY micro-batch to `onBatch`, force
+    * `result` before teardown, and delete the ck tree on every exit path.
     * Invariants owned here, once (code-review r13 + ADVICE r13):
     *   - the ck dir's deletion is a finally tied to its CREATION — it
     *     runs whether start() throws, a micro-batch fails, or q.stop()
@@ -275,10 +271,10 @@ object StreamingQueries extends QueryModule {
     * The caller keeps the state's close() as ITS outermost finally — the
     * state types differ per query and their pinned traces must release on
     * every path, including a staging failure before this helper is ever
-    * entered. */
-  private def driveForeachBatch(src: DataFrame, ckTag: String)
-                               (onBatch: DataFrame => Unit)
-                               (result: => DataFrame): DataFrame = {
+    * entered (the screened family's [[CdcReplay.run]] does this). */
+  private[queries] def driveForeachBatch[T](src: DataFrame, ckTag: String)
+                                           (onBatch: DataFrame => Unit)
+                                           (result: => T): T = {
     import java.nio.file.Files
     val ck = Files.createTempDirectory(ckTag)
     try {
@@ -291,13 +287,20 @@ object StreamingQueries extends QueryModule {
       try q.processAllAvailable()
       finally q.stop()
       result
-    } finally {
-      val walk = Files.walk(ck)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(Files.deleteIfExists(_))
-      finally walk.close()
-    }
+    } finally deleteTree(ck)
   }
+
+  /** The postings delta of CDC document rows — (doc_id, term, tf[, dl])
+    * weighted by the rows' `w`, through the shared posting builder (the
+    * weight column rides its grouping). */
+  private def postingsDelta(docs: DataFrame, withDl: Boolean): ZSetFrame =
+    ZSetFrame.fromDelta(Postings.build(docs, withDl).select(
+      Postings.postingCols(withDl) :+ col("w").as(ZSetFrame.W): _*))
+
+  /** Empty CDC document rows: the template the streamed states start from. */
+  private def noDocs(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"), col("text"), lit(1L).as("w")).where(lit(false))
 
   /** Streaming read of the (staged) events table; converts the raw
     * nanos-long event time back to TimestampType. */
@@ -531,89 +534,83 @@ object StreamingQueries extends QueryModule {
       import java.nio.file.{Files, Paths}
       import scala.jdk.CollectionConverters._
       val base = Paths.get(s"/tmp/graft_chain_${java.util.UUID.randomUUID().toString.take(8)}")
-      val stage1Out = base.resolve("stage1").toString
-      val ck1 = base.resolve("ck1").toString
-      val hourly = eventStream(s, dir, "tumble", sentinel = true)
-        .withWatermark("ts", "1 second")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(epochMs(col("window.start")).as("wstart"),
-          col("event_type"), col("n"))
-      // WINDOW-START-KEYED multi-file interchange (VERDICT r7 #6 — the
-      // one-file-per-batch coalesce(1) was a scale constraint): each batch
-      // RANGE-partitions its closed windows by wstart, so every part file
-      // covers a disjoint, contiguous window range AND the part-file index
-      // (hence name) is the range order — partition 0 holds the smallest
-      // wstart range. The files' mtimes are then set strictly monotone in
-      // (batch id, part index), a pure metadata pass: the time-monotonicity
-      // stage 2's watermark needs holds file-by-file — across batches
-      // because append-mode closes strictly later windows, within a batch
-      // by the range keying — with NO bound on files per batch.
-      val t0Interchange = System.currentTimeMillis()
-      // ONE cumulative seen-set across the drive (r18, VERDICT r17 #1b —
-      // the per-batch before/after pair of Files.list passes halves to one
-      // list per batch): the interchange dir is fresh per invocation and
-      // only this drive writes it, so "files seen at the end of batch k"
-      // IS "files before batch k+1". The stamping itself stays per-batch —
-      // stage 2's watermark needs mtimes monotone in (batch, part index),
-      // and only the writing batch knows its own files' range order.
-      val seen = scala.collection.mutable.Set[String]()
-      def freshParquet(): Seq[java.nio.file.Path] = {
-        val l = Files.list(Paths.get(stage1Out))
-        val fresh = try l.iterator().asScala
-          .filter(p => p.getFileName.toString.endsWith(".parquet") &&
-            !seen.contains(p.getFileName.toString)).toSeq
-        finally l.close()
-        seen ++= fresh.map(_.getFileName.toString)
-        fresh
-      }
-      val q1 = hourly.writeStream
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          batch.repartitionByRange(2, col("wstart"))
-            .write.mode("append").parquet(stage1Out)
-          // part-NNNNN names sort in partition order = wstart-range order
-          freshParquet().sortBy(_.getFileName.toString).zipWithIndex.foreach {
-            case (p, i) =>
-              Files.setLastModifiedTime(p,
-                java.nio.file.attribute.FileTime.fromMillis(
-                  t0Interchange + bid * 10000L + i * 10L))
-          }
+      try {
+        val stage1Out = base.resolve("stage1").toString
+        val ck1 = base.resolve("ck1").toString
+        val hourly = eventStream(s, dir, "tumble", sentinel = true)
+          .withWatermark("ts", "1 second")
+          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+          .agg(count(lit(1)).as("n"))
+          .select(epochMs(col("window.start")).as("wstart"),
+            col("event_type"), col("n"))
+        // WINDOW-START-KEYED multi-file interchange (VERDICT r7 #6 — the
+        // one-file-per-batch coalesce(1) was a scale constraint): each batch
+        // RANGE-partitions its closed windows by wstart, so every part file
+        // covers a disjoint, contiguous window range AND the part-file index
+        // (hence name) is the range order — partition 0 holds the smallest
+        // wstart range. The files' mtimes are then set strictly monotone in
+        // (batch id, part index), a pure metadata pass: the time-monotonicity
+        // stage 2's watermark needs holds file-by-file — across batches
+        // because append-mode closes strictly later windows, within a batch
+        // by the range keying — with NO bound on files per batch.
+        val t0Interchange = System.currentTimeMillis()
+        // ONE cumulative seen-set across the drive (r18, VERDICT r17 #1b —
+        // the per-batch before/after pair of Files.list passes halves to one
+        // list per batch): the interchange dir is fresh per invocation and
+        // only this drive writes it, so "files seen at the end of batch k"
+        // IS "files before batch k+1". The stamping itself stays per-batch —
+        // stage 2's watermark needs mtimes monotone in (batch, part index),
+        // and only the writing batch knows its own files' range order.
+        val seen = scala.collection.mutable.Set[String]()
+        def freshParquet(): Seq[java.nio.file.Path] = {
+          val l = Files.list(Paths.get(stage1Out))
+          val fresh = try l.iterator().asScala
+            .filter(p => p.getFileName.toString.endsWith(".parquet") &&
+              !seen.contains(p.getFileName.toString)).toSeq
+          finally l.close()
+          seen ++= fresh.map(_.getFileName.toString)
+          fresh
         }
-        .option("checkpointLocation", ck1)
-        .outputMode(OutputMode.Append)
-        .start()
-      q1.processAllAvailable(); q1.stop()
-      // interchange sentinel: flush stage 2's tail windows on replay. Its
-      // files' mtimes are forced past every batch file's forced stamp (the
-      // natural clock could lag the bid-derived stamps above).
-      locally {
-        s.range(1).select((lit(FlushNanos / 1000000L)).as("wstart"),
-            lit("flush").as("event_type"), lit(0L).as("n"))
-          .coalesce(1).write.mode("append").parquet(stage1Out)
-        freshParquet().foreach(p => Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(
-            t0Interchange + 1000000000L)))
-      }
-      val schema2 = s.read.parquet(stage1Out).schema
-      val rewin = s.readStream.schema(schema2)
-        .option("maxFilesPerTrigger", "1").parquet(stage1Out)
-        .withColumn("hts", timestamp_millis(col("wstart")))
-        .withWatermark("hts", "1 second")
-        .groupBy(window(col("hts"), "6 hours"), col("event_type"))
-        .agg(max("n").as("max_hourly_n"), sum("n").as("sum_n"))
-        .select(epochMs(col("window.start")).as("w6start"), col("event_type"),
-          col("max_hourly_n"), col("sum_n"))
-      val out = StreamOps.runToMemory(s, rewin,
-        s"chained_stateful_${System.nanoTime()}", OutputMode.Append)
-        .where(col("event_type") =!= "flush")
-      // interchange + checkpoint are consumed (memory sink holds the rows)
-      if (Files.exists(base)) {
-        val walk = Files.walk(base)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(Files.deleteIfExists(_))
-        finally walk.close()
-      }
-      out
+        val q1 = hourly.writeStream
+          .foreachBatch { (batch: DataFrame, bid: Long) =>
+            batch.repartitionByRange(2, col("wstart"))
+              .write.mode("append").parquet(stage1Out)
+            // part-NNNNN names sort in partition order = wstart-range order
+            freshParquet().sortBy(_.getFileName.toString).zipWithIndex.foreach {
+              case (p, i) =>
+                Files.setLastModifiedTime(p,
+                  java.nio.file.attribute.FileTime.fromMillis(
+                    t0Interchange + bid * 10000L + i * 10L))
+            }
+          }
+          .option("checkpointLocation", ck1)
+          .outputMode(OutputMode.Append)
+          .start()
+        q1.processAllAvailable(); q1.stop()
+        // interchange sentinel: flush stage 2's tail windows on replay. Its
+        // files' mtimes are forced past every batch file's forced stamp (the
+        // natural clock could lag the bid-derived stamps above).
+        locally {
+          s.range(1).select((lit(FlushNanos / 1000000L)).as("wstart"),
+              lit("flush").as("event_type"), lit(0L).as("n"))
+            .coalesce(1).write.mode("append").parquet(stage1Out)
+          freshParquet().foreach(p => Files.setLastModifiedTime(p,
+            java.nio.file.attribute.FileTime.fromMillis(
+              t0Interchange + 1000000000L)))
+        }
+        val schema2 = s.read.parquet(stage1Out).schema
+        val rewin = s.readStream.schema(schema2)
+          .option("maxFilesPerTrigger", "1").parquet(stage1Out)
+          .withColumn("hts", timestamp_millis(col("wstart")))
+          .withWatermark("hts", "1 second")
+          .groupBy(window(col("hts"), "6 hours"), col("event_type"))
+          .agg(max("n").as("max_hourly_n"), sum("n").as("sum_n"))
+          .select(epochMs(col("window.start")).as("w6start"), col("event_type"),
+            col("max_hourly_n"), col("sum_n"))
+        StreamOps.runToMemory(s, rewin,
+          s"chained_stateful_${System.nanoTime()}", OutputMode.Append)
+          .where(col("event_type") =!= "flush")
+      } finally deleteTree(base) // consumed: the memory sink holds the rows
     }),
 
     // CONTINUOUS-INGEST CORPUS DEDUP as a REAL streaming query — d14's
@@ -691,72 +688,67 @@ object StreamingQueries extends QueryModule {
       import s.implicits._
       val base = Paths.get(
         s"/tmp/graft_uchain_${java.util.UUID.randomUUID().toString.take(8)}")
-      val inter = base.resolve("deltas").toString
-      val staged = stageSplitDir(s, dir, "events", "event_id", 4)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-        .select(col("user_id")).as[Long]
-      // stage 1: running count per user, −old/+new per trigger
-      val deltas1 = src.groupByKey(identity)
-        .flatMapGroupsWithState[Long, (Long, Long, Long)](
-          OutputMode.Append,
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-          (u: Long, batch: Iterator[Long],
-           state: org.apache.spark.sql.streaming.GroupState[Long]) =>
-            val old = state.getOption
-            val n = old.getOrElse(0L) + batch.size
-            state.update(n)
-            old.map(o => (u, o, -1L)).iterator ++ Iterator((u, n, 1L))
-        }.toDF("user_id", "n", "w")
-      val q1 = deltas1.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // coalesce(2) is FILE-COUNT control, not an ordering constraint
-          // (contrast q64): the weighted interchange is order-independent,
-          // this just keeps stage 2's per-file trigger count proportional
-          // to stage-1 batches rather than to shuffle partitions
-          if (!batch.isEmpty)
-            batch.coalesce(2).write.mode("append").parquet(inter)
-        }
-        .option("checkpointLocation", base.resolve("ck1").toString)
-        .outputMode(OutputMode.Append)
-        .start()
-      q1.processAllAvailable(); q1.stop()
-      // stage 2: per-bucket user count from the weighted deltas (bucket =
-      // n div 8), itself emitting −old/+new; consumes weights, so any file
-      // order and any trigger partitioning of the delta log is correct
-      val s2src = s.readStream
-        .schema(s.read.parquet(inter).schema)
-        .option("maxFilesPerTrigger", "1").parquet(inter)
-        .select(expr("n div 8").as("bucket"), col("w"))
-        .as[(Long, Long)]
-      val deltas2 = s2src.groupByKey(_._1)
-        .flatMapGroupsWithState[Long, (Long, Long, Long)](
-          OutputMode.Append,
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-          (b: Long, batch: Iterator[(Long, Long)],
-           state: org.apache.spark.sql.streaming.GroupState[Long]) =>
-            val old = state.getOption
-            val cur = old.getOrElse(0L) + batch.map(_._2).sum
-            state.update(cur)
-            if (old.contains(cur)) Iterator.empty
-            else old.map(o => (b, o, -1L)).iterator ++ Iterator((b, cur, 1L))
-        }.toDF("bucket", "n_users", "w")
-      val out = StreamOps.runToMemory(s, deltas2,
-        s"update_chain_${System.nanoTime()}", OutputMode.Append)
-      // Z-set consolidation: intermediate counts telescope away, leaving
-      // the final histogram rows with net weight +1
-      val res = out.groupBy("bucket", "n_users").agg(sum("w").as("net"))
-        .where(col("net") > 0 && col("n_users") > 0)
-        .select("bucket", "n_users")
-        .localCheckpoint(true)
-      if (Files.exists(base)) {
-        val walk = Files.walk(base)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(Files.deleteIfExists(_))
-        finally walk.close()
-      }
-      res
+      try {
+        val inter = base.resolve("deltas").toString
+        val staged = stageSplitDir(s, dir, "events", "event_id", 4)
+        val schema = s.read.parquet(s"$dir/events.parquet").schema
+        val src = s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(staged)
+          .select(col("user_id")).as[Long]
+        // stage 1: running count per user, −old/+new per trigger
+        val deltas1 = src.groupByKey(identity)
+          .flatMapGroupsWithState[Long, (Long, Long, Long)](
+            OutputMode.Append,
+            org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
+            (u: Long, batch: Iterator[Long],
+             state: org.apache.spark.sql.streaming.GroupState[Long]) =>
+              val old = state.getOption
+              val n = old.getOrElse(0L) + batch.size
+              state.update(n)
+              old.map(o => (u, o, -1L)).iterator ++ Iterator((u, n, 1L))
+          }.toDF("user_id", "n", "w")
+        val q1 = deltas1.writeStream
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            // coalesce(2) is FILE-COUNT control, not an ordering constraint
+            // (contrast q64): the weighted interchange is order-independent,
+            // this just keeps stage 2's per-file trigger count proportional
+            // to stage-1 batches rather than to shuffle partitions
+            if (!batch.isEmpty)
+              batch.coalesce(2).write.mode("append").parquet(inter)
+          }
+          .option("checkpointLocation", base.resolve("ck1").toString)
+          .outputMode(OutputMode.Append)
+          .start()
+        q1.processAllAvailable(); q1.stop()
+        // stage 2: per-bucket user count from the weighted deltas (bucket =
+        // n div 8), itself emitting −old/+new; consumes weights, so any file
+        // order and any trigger partitioning of the delta log is correct
+        val s2src = s.readStream
+          .schema(s.read.parquet(inter).schema)
+          .option("maxFilesPerTrigger", "1").parquet(inter)
+          .select(expr("n div 8").as("bucket"), col("w"))
+          .as[(Long, Long)]
+        val deltas2 = s2src.groupByKey(_._1)
+          .flatMapGroupsWithState[Long, (Long, Long, Long)](
+            OutputMode.Append,
+            org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
+            (b: Long, batch: Iterator[(Long, Long)],
+             state: org.apache.spark.sql.streaming.GroupState[Long]) =>
+              val old = state.getOption
+              val cur = old.getOrElse(0L) + batch.map(_._2).sum
+              state.update(cur)
+              if (old.contains(cur)) Iterator.empty
+              else old.map(o => (b, o, -1L)).iterator ++ Iterator((b, cur, 1L))
+          }.toDF("bucket", "n_users", "w")
+        val out = StreamOps.runToMemory(s, deltas2,
+          s"update_chain_${System.nanoTime()}", OutputMode.Append)
+        // Z-set consolidation: intermediate counts telescope away, leaving
+        // the final histogram rows with net weight +1
+        out.groupBy("bucket", "n_users").agg(sum("w").as("net"))
+          .where(col("net") > 0 && col("n_users") > 0)
+          .select("bucket", "n_users")
+          .localCheckpoint(true)
+      } finally deleteTree(base)
     }),
 
     // STREAMING SESSION WINDOWS — q52's native session_window run under
@@ -824,7 +816,6 @@ object StreamingQueries extends QueryModule {
     // and the GC'd history is unreachable by construction.
     "q87_stream_rolling_radix" -> ((s, dir) => {
       import org.apache.spark.sql.types.DecimalType
-      import graft.core.ZSetFrame
       import graft.incremental.{Incremental, RollingLinearState}
       val (jan1, horizon) = (1704067200000L, 3600000L)
       val sliceMs = 8L * 24 * 3600 * 1000 // 4 ascending 8-day slices
@@ -879,225 +870,87 @@ object StreamingQueries extends QueryModule {
 
     // STREAMING INCREMENTAL TF-IDF (q88, VERDICT r12 #8 — the streaming
     // rendition of t12; reference: operator/upsert.rs:21-60 command-stream
-    // maintenance): the documents table replays as FIVE staged files — four
-    // insert epochs (doc_id mod 4, weight +1) then a RETRACTION epoch
-    // re-shipping the doc_id%10==3 rows with weight −1 (a CDC delete
-    // command; xform-staged, since a delete re-ships rows a row→slice map
-    // cannot duplicate) — and a checkpointed foreachBatch drives the SAME
-    // TfIdfState t12 certifies: per trigger, tokenize the batch into
-    // (doc_id, term, tf, ±w) postings and step the four-trace index. The
-    // retraction epoch exercises the df-index downward maintenance and the
-    // screening's retract-side floor crossings. Unlike t12 (which threads
-    // CDC bucket spans driver-side), the stream derives spans at runtime
-    // through the partition-pruned PROBE path — the two queries certify
-    // both span-acquisition modes. Integrated output ≡ the batch top-term
-    // query over the surviving corpus (t12's oracle verbatim).
+    // maintenance): the documents table replays as the shared CDC stream
+    // (CdcReplay.stream — FIVE staged files: four insert epochs at weight
+    // +1, then a RETRACTION epoch re-shipping the doc_id%10==3 rows at
+    // weight −1, a CDC delete command), and each micro-batch steps the SAME
+    // TfIdfState t12 certifies: tokenize the batch into (doc_id, term, tf,
+    // ±w) postings and step the four-trace index. The retraction epoch
+    // exercises the df-index downward maintenance and the screening's
+    // retract-side floor crossings. Unlike t12 (which threads CDC bucket
+    // spans driver-side), the stream derives spans at runtime through the
+    // partition-pruned PROBE path — the two queries certify both
+    // span-acquisition modes. Integrated output ≡ the batch top-term query
+    // over the surviving corpus (t12's oracle verbatim).
     "q88_stream_inc_tfidf" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      import graft.incremental.TfIdfState
-      val E = 4
-      val staged = stageSlicedDir(s, dir, "documents", "dtfidf5", E + 1,
-        _ => col("slice"),
-        xform = df => df.select(col("doc_id"), col("text"),
-            pmod(col("doc_id"), lit(E)).cast("int").as("slice"),
-            lit(1L).as("w"))
-          .unionByName(df.where(pmod(col("doc_id"), lit(10)) === 3)
-            .select(col("doc_id"), col("text"), lit(E).as("slice"),
-              lit(-1L).as("w"))))
-      // shared posting builder (VERDICT r13 #3) — the CDC weight column
-      // rides the grouping; one tokenize/tf across t10/t12/q88
-      def toPostings(df: DataFrame): DataFrame =
-        Postings.build(df, withDl = false)
-          .select(col("doc_id"), col("term"), col("tf"),
-            col("w").as(ZSetFrame.W))
-      val template = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("w", lit(1L))
-      val st = new TfIdfState(
-        ZSetFrame.fromDelta(toPostings(template.where(lit(false)))), 32)
-      val acc = new graft.incremental.Incremental.State(ZSetFrame.fromDelta(
-        toPostings(template.where(lit(false)))
-          .select(col("doc_id"), col("term"), col("tf"),
-            lit(0L).as("score_q"), col(ZSetFrame.W))))
-      val schema = s.read.parquet(staged).schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-      // shared exception-safe drive (driveForeachBatch, VERDICT r14 #1);
-      // st.close() is the caller's outermost finally so the state's pinned
-      // traces release on every path
-      try {
-        driveForeachBatch(src, "graft_stfidf_ck") { batch =>
-          acc.update(st.step(ZSetFrame.fromDelta(toPostings(batch))))
-        } {
-          acc.acc.consolidate.toDF
-            .select("doc_id", "term", "tf", "score_q")
-            .localCheckpoint(true)
-        }
-      } finally st.close()
+      val st = new TfIdfState(postingsDelta(noDocs(s, dir), withDl = false), 32)
+      CdcReplay.run(CdcReplay.stream(s, dir, "graft_stfidf_ck"),
+          "doc_id", "term", "tf", "score_q")(st.close()) { (_, b) =>
+        st.step(postingsDelta(b, withDl = false))
+      }
     }),
 
     // STREAMING INCREMENTAL BM25 (q89) — t13's Bm25State driven by the
-    // real streaming engine, the q88 pattern on the harsher-coupled
-    // state: five staged epochs (4 inserts then a CDC retraction epoch
-    // re-shipping doc_id%10==3 rows at weight −1) through a checkpointed
-    // foreachBatch. Each micro-batch advances the driver-held corpus
-    // constants (N, T, per-term df), screens the query-restricted index
-    // for quantized floor crossings, and emits the top-k replacement
-    // delta; the integrated deltas must equal t11's batch top-10 over the
-    // surviving corpus (t13's oracle verbatim). Certifies the state's
-    // runtime path: constant maintenance from micro-batch aggregations,
-    // affected-span Observation under the streaming scheduler, and
-    // downward df/N/T maintenance on the retraction epoch.
+    // real streaming engine on the shared CDC stream (see q88). Each
+    // micro-batch advances the driver-held corpus constants (N, T,
+    // per-term df), screens the query-restricted index for quantized floor
+    // crossings, and emits the top-k replacement delta; the integrated
+    // deltas must equal t11's batch top-10 over the surviving corpus
+    // (t13's oracle verbatim). Certifies the state's runtime path:
+    // constant maintenance from micro-batch aggregations, affected-span
+    // Observation under the streaming scheduler, and downward df/N/T
+    // maintenance on the retraction epoch.
     "q89_stream_inc_bm25" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      import graft.incremental.Bm25State
-      val E = 4
-      val qterms = Postings.QueryTerms
-      val staged = stageSlicedDir(s, dir, "documents", "dbm255", E + 1,
-        _ => col("slice"),
-        xform = df => df.select(col("doc_id"), col("text"),
-            pmod(col("doc_id"), lit(E)).cast("int").as("slice"),
-            lit(1L).as("w"))
-          .unionByName(df.where(pmod(col("doc_id"), lit(10)) === 3)
-            .select(col("doc_id"), col("text"), lit(E).as("slice"),
-              lit(-1L).as("w"))))
-      // shared posting builder (VERDICT r13 #3) — with dl; one
-      // tokenize/tf/dl across t11/t13/q89
-      def toPostings(df: DataFrame): DataFrame =
-        Postings.build(df, withDl = true)
-          .select(col("doc_id"), col("term"), col("tf"), col("dl"),
-            col("w").as(ZSetFrame.W))
-      val template = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("w", lit(1L))
-      val st = new Bm25State(
-        ZSetFrame.fromDelta(toPostings(template.where(lit(false)))),
-        qterms, 32)
-      val acc = new graft.incremental.Incremental.State(ZSetFrame.fromDelta(
-        toPostings(template.where(lit(false)))
-          .select(col("doc_id"), lit(0L).as("score_q"), lit(0).as("rnk"),
-            col(ZSetFrame.W))))
-      val schema = s.read.parquet(staged).schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-      // shared exception-safe drive (driveForeachBatch, VERDICT r14 #1);
-      // st.close() outermost — see q88
-      try {
-        driveForeachBatch(src, "graft_sbm25_ck") { batch =>
-          acc.update(st.step(ZSetFrame.fromDelta(toPostings(batch))))
-        } {
-          acc.acc.consolidate.toDF
-            .select("doc_id", "score_q", "rnk")
-            .localCheckpoint(true)
-        }
-      } finally st.close()
+      val st = new Bm25State(postingsDelta(noDocs(s, dir), withDl = true),
+        Postings.QueryTerms, 32)
+      CdcReplay.run(CdcReplay.stream(s, dir, "graft_sbm25_ck"),
+          "doc_id", "score_q", "rnk")(st.close()) { (_, b) =>
+        st.step(postingsDelta(b, withDl = true))
+      }
     }),
 
     // STREAMING MULTI-QUERY INCREMENTAL BM25 (q90, VERDICT r14 #3) —
     // MultiBm25State (the certified multi-query retrieval engine, t14)
     // under the REAL streaming engine: the q89 drive verbatim on the
     // multi-query state, completing the batch / step-loop / streaming ×
-    // single / multi-query matrix (t11+t14 / t13+t14 / q89+q90). Five
-    // staged epochs (4 inserts then the doc_id%10==3 CDC retraction
-    // epoch at weight −1) through a checkpointed foreachBatch; each
-    // micro-batch advances the shared corpus constants, screens the
-    // union-restricted index ONCE for all four standing query sets, and
-    // emits the per-query top-k replacement delta. Integrated output ≡
-    // the per-query batch top-10 over the surviving corpus (t14's oracle
-    // verbatim).
+    // single / multi-query matrix (t11+t14 / t13+t14 / q89+q90). Each
+    // micro-batch of the shared CDC stream advances the shared corpus
+    // constants, screens the union-restricted index ONCE for all four
+    // standing query sets, and emits the per-query top-k replacement
+    // delta. Integrated output ≡ the per-query batch top-10 over the
+    // surviving corpus (t14's oracle verbatim).
     "q90_stream_multi_bm25" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      import graft.incremental.MultiBm25State
-      val E = 4
-      val staged = stageSlicedDir(s, dir, "documents", "dbm255", E + 1,
-        _ => col("slice"),
-        xform = df => df.select(col("doc_id"), col("text"),
-            pmod(col("doc_id"), lit(E)).cast("int").as("slice"),
-            lit(1L).as("w"))
-          .unionByName(df.where(pmod(col("doc_id"), lit(10)) === 3)
-            .select(col("doc_id"), col("text"), lit(E).as("slice"),
-              lit(-1L).as("w"))))
-      // the q89 CDC posting shape (shared builder) — the staged dir is
-      // ALSO q89's ("dbm255"): the replay is identical, only the standing
-      // query side differs, so the two queries share one staging cost
-      def toPostings(df: DataFrame): DataFrame =
-        Postings.build(df, withDl = true)
-          .select(col("doc_id"), col("term"), col("tf"), col("dl"),
-            col("w").as(ZSetFrame.W))
-      val template = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("w", lit(1L))
-      val st = new MultiBm25State(
-        ZSetFrame.fromDelta(toPostings(template.where(lit(false)))),
+      val st = new MultiBm25State(postingsDelta(noDocs(s, dir), withDl = true),
         Postings.MultiQuerySets, 32)
-      val acc = new graft.incremental.Incremental.State(ZSetFrame.fromDelta(
-        toPostings(template.where(lit(false)))
-          .select(lit("").as("query_id"), col("doc_id"),
-            lit(0L).as("score_q"), lit(0).as("rnk"), col(ZSetFrame.W))))
-      val schema = s.read.parquet(staged).schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-      try {
-        driveForeachBatch(src, "graft_smbm25_ck") { batch =>
-          acc.update(st.step(ZSetFrame.fromDelta(toPostings(batch))))
-        } {
-          acc.acc.consolidate.toDF
-            .select("query_id", "doc_id", "score_q", "rnk")
-            .localCheckpoint(true)
-        }
-      } finally st.close()
+      CdcReplay.run(CdcReplay.stream(s, dir, "graft_smbm25_ck"),
+          "query_id", "doc_id", "score_q", "rnk")(st.close()) { (_, b) =>
+        st.step(postingsDelta(b, withDl = true))
+      }
     }),
 
     // STREAMING INCREMENTAL PMI (q91) — t15's PmiState driven by the real
-    // streaming engine: the q89/q90 CDC replay (SAME staged dir — the
-    // replay is identical, only the maintained state differs) through the
-    // shared drive; each micro-batch advances the driver-held constants
-    // (N, c_a, c_ab), decides floor crossings on the driver, and emits the
-    // per-doc association-score replacement delta. The retraction epoch
-    // exercises the downward constant maintenance and retract-side
-    // crossings. Integrated output ≡ the batch per-doc PMI sum over the
-    // surviving corpus (t15's oracle verbatim).
+    // streaming engine on the shared CDC stream; each micro-batch advances
+    // the driver-held constants (N, c_a, c_ab), decides floor crossings on
+    // the driver, and emits the per-doc association-score replacement
+    // delta. The retraction epoch exercises the downward constant
+    // maintenance and retract-side crossings. Integrated output ≡ the
+    // batch per-doc PMI sum over the surviving corpus (t15's oracle
+    // verbatim).
     "q91_stream_inc_pmi" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      import graft.incremental.PmiState
-      val E = 4
-      val staged = stageSlicedDir(s, dir, "documents", "dbm255", E + 1,
-        _ => col("slice"),
-        xform = df => df.select(col("doc_id"), col("text"),
-            pmod(col("doc_id"), lit(E)).cast("int").as("slice"),
-            lit(1L).as("w"))
-          .unionByName(df.where(pmod(col("doc_id"), lit(10)) === 3)
-            .select(col("doc_id"), col("text"), lit(E).as("slice"),
-              lit(-1L).as("w"))))
-      def toTerms(df: DataFrame): DataFrame =
+      def toTerms(df: DataFrame): ZSetFrame = ZSetFrame.fromDelta(
         Postings.distinctTerms(df)
-          .select(col("doc_id"), col("term"), col("w").as(ZSetFrame.W))
-      val template = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("w", lit(1L))
-      val st = new PmiState(
-        ZSetFrame.fromDelta(toTerms(template.where(lit(false)))),
-        Postings.PmiTerms, 32)
-      val acc = new graft.incremental.Incremental.State(ZSetFrame.fromDelta(
-        toTerms(template.where(lit(false)))
-          .select(col("doc_id"), lit(0L).as("n_pairs"),
-            lit(0L).as("score_q"), col(ZSetFrame.W))))
-      val schema = s.read.parquet(staged).schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-      try {
-        driveForeachBatch(src, "graft_spmi_ck") { batch =>
-          acc.update(st.step(ZSetFrame.fromDelta(toTerms(batch))))
-        } {
-          acc.acc.consolidate.toDF
-            .select("doc_id", "n_pairs", "score_q")
-            .localCheckpoint(true)
-        }
-      } finally st.close()
+          .select(col("doc_id"), col("term"), col("w").as(ZSetFrame.W)))
+      val st = new PmiState(toTerms(noDocs(s, dir)), Postings.PmiTerms, 32)
+      CdcReplay.run(CdcReplay.stream(s, dir, "graft_spmi_ck"),
+          "doc_id", "n_pairs", "score_q")(st.close()) { (_, b) =>
+        st.step(toTerms(b))
+      }
     }),
 
     // STREAMING INCREMENTAL COSINE ASSIGNMENT (q93, VERDICT r16 #1) —
     // t16's CosineState driven by the real streaming engine, completing
     // the streaming row of the screened-family matrix (t12→q88, t13→q89,
-    // t14→q90, t15→q91, t16→q93): the q89–q91 CDC replay (SAME staged dir
-    // — the replay is identical, only the maintained state differs, so
-    // the five queries share one staging cost) through the shared drive.
+    // t14→q90, t15→q91, t16→q93), all five on the one shared CDC stream.
     // Each micro-batch advances the driver-held constants (N, the |U| df
     // values), decides quantized-idf floor crossings on the driver (quiet
     // micro-batches schedule zero cluster-side screening), and emits the
@@ -1106,44 +959,13 @@ object StreamingQueries extends QueryModule {
     // Integrated output ≡ the batch per-doc argmax over the surviving
     // corpus (t16's oracle verbatim).
     "q93_stream_inc_cosine" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      import graft.incremental.CosineState
-      val E = 4
-      val staged = stageSlicedDir(s, dir, "documents", "dbm255", E + 1,
-        _ => col("slice"),
-        xform = df => df.select(col("doc_id"), col("text"),
-            pmod(col("doc_id"), lit(E)).cast("int").as("slice"),
-            lit(1L).as("w"))
-          .unionByName(df.where(pmod(col("doc_id"), lit(10)) === 3)
-            .select(col("doc_id"), col("text"), lit(E).as("slice"),
-              lit(-1L).as("w"))))
-      // shared posting builder (VERDICT r13 #3) — t16's shape (no dl; the
-      // cosine is length-normalized by ‖d‖ itself)
-      def toPostings(df: DataFrame): DataFrame =
-        Postings.build(df, withDl = false)
-          .select(col("doc_id"), col("term"), col("tf"),
-            col("w").as(ZSetFrame.W))
-      val template = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("w", lit(1L))
-      val st = new CosineState(
-        ZSetFrame.fromDelta(toPostings(template.where(lit(false)))),
+      // t16's posting shape (no dl; the cosine is length-normalized by ‖d‖)
+      val st = new CosineState(postingsDelta(noDocs(s, dir), withDl = false),
         Postings.CosineCentroids, 32)
-      val acc = new graft.incremental.Incremental.State(ZSetFrame.fromDelta(
-        toPostings(template.where(lit(false)))
-          .select(col("doc_id"), lit("").as("cid"), lit(0L).as("cos_q"),
-            col(ZSetFrame.W))))
-      val schema = s.read.parquet(staged).schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-      try {
-        driveForeachBatch(src, "graft_scos_ck") { batch =>
-          acc.update(st.step(ZSetFrame.fromDelta(toPostings(batch))))
-        } {
-          acc.acc.consolidate.toDF
-            .select("doc_id", "cid", "cos_q")
-            .localCheckpoint(true)
-        }
-      } finally st.close()
+      CdcReplay.run(CdcReplay.stream(s, dir, "graft_scos_ck"),
+          "doc_id", "cid", "cos_q")(st.close()) { (_, b) =>
+        st.step(postingsDelta(b, withDl = false))
+      }
     })
   )
 

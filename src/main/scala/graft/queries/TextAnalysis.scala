@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Tables, ZSetFrame}
+import graft.incremental.{Bm25State, CosineState, KeyedState, MultiBm25State,
+  PmiState, TfIdfState}
 
 /** Text-analysis + dedup + similarity operators for large-scale training-data
   * pipelines (builder brief): token counting, quality scoring, language ID,
@@ -47,60 +49,23 @@ object TextAnalysis extends QueryModule {
     Tables(s, dir, name)
 
   /** Delete a per-invocation /tmp scratch tree (the durable-restart
-    * queries' state dirs) — best-effort, and the Files.walk stream is
-    * CLOSED (ADVICE r16: the old iterator-to-Seq form never closed the
-    * stream — one leaked directory handle per bench invocation). */
-  /** ONE-job epoch pre-split of a pinned posting/term table (r18, VERDICT
-    * r17 #6): the t12–t16/q92/q94 CDC replays derive every epoch's delta
-    * as a `where` filter of the pinned parent, so each step's first action
-    * re-scanned ALL parent partitions to materialize its lazily-pinned
-    * slice (measured r17: the re-filter rode the delta-pin job — ~34
-    * tasks, 8–10 s taskSum, 0.3–0.5 s wall per step at sf0.1). The rows
-    * are instead routed ONCE into a slice-keyed KeyedState — slice id =
-    * (doc_id mod `mod`) ⊕ the retraction-residue bit — and each epoch
-    * reads a PARTITION-PRUNED view of its own slices; the driver computes
-    * the bucket ids arithmetically (the CDC "a source knows its delta's
-    * keys" discipline), so there is no per-step discovery job and no
-    * full-parent scan. The slice predicates stay on the pruned read, so
-    * hash-collision contamination (another slice sharing a bucket)
-    * filters out exactly — the epoch frames are row-identical to the
-    * former `where` filters. Close after the replay's last step. */
-  private final class EpochSlices(src: DataFrame, mod: Int, retRes: Int) {
-    import graft.core.ZSetFrame
-    private val nB = 16
-    private val srcCols = src.columns.toSeq
-    private val slCol = (pmod(col("doc_id"), lit(mod.toLong)) * lit(2L) +
-      when(pmod(col("doc_id"), lit(10L)) === lit(retRes.toLong), lit(1L))
-        .otherwise(lit(0L))).cast("long").as("__sl")
-    private val slicer = new graft.incremental.KeyedState(Seq("__sl"), nB,
-      ZSetFrame.fromTable(src.where(lit(false)).select(col("*"), slCol)))
-    slicer.merge(ZSetFrame.fromTable(src.select(col("*"), slCol)),
-      checkpointDelta = false)
-    private def read(slices: Seq[Long], pred: Column): DataFrame =
-      slicer.view(graft.incremental.KeyedState.bucketsOfLongKeys(slices, nB))
-        .df.where(pred).select(srcCols.map(col): _*)
-    /** rows with doc_id % mod == res — an insert epoch's delta */
-    def insert(res: Int): DataFrame =
-      read(Seq(res * 2L, res * 2L + 1L),
-        pmod(col("doc_id"), lit(mod.toLong)) === lit(res.toLong))
-    /** rows with doc_id % 10 == retRes — the retraction epoch's delta */
-    def retract: DataFrame =
-      read((0 until mod).map(v => v * 2L + 1L),
-        pmod(col("doc_id"), lit(10L)) === lit(retRes.toLong))
-    def close(): Unit = slicer.close()
-  }
-
+    * queries' state dirs) — best-effort. */
   private def deleteScratchTree(path: String): Unit =
-    try {
-      import java.nio.file.{Files, Path, Paths}
-      val root = Paths.get(path)
-      if (Files.exists(root)) {
-        val walk = Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => { Files.deleteIfExists(p); () })
-        finally walk.close()
-      }
-    } catch { case _: Throwable => () }
+    try StreamingQueries.deleteTree(java.nio.file.Paths.get(path))
+    catch { case _: Throwable => () }
+
+  private def documents(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents").select(col("doc_id"), col("text"))
+
+  /** The pinned (doc_id, term, tf[, dl]) postings a CDC replay steps
+    * through (shared posting builder, VERDICT r13 #3). */
+  private def pinnedPostings(docs: DataFrame, withDl: Boolean): DataFrame =
+    Postings.build(docs, withDl).select(Postings.postingCols(withDl): _*)
+      .localCheckpoint(true)
+
+  /** The empty Z-set over `rows`' columns a replayed state starts from. */
+  private def empty(rows: DataFrame): ZSetFrame =
+    ZSetFrame.fromTable(rows.where(lit(false)))
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // TF-IDF top term per document — the doc-term-matrix shape every
@@ -117,7 +82,7 @@ object TextAnalysis extends QueryModule {
     // ROW_NUMBER keyed on doc_id with a total (score desc, term asc)
     // order — deterministic under any partitioning.
     "t10_tfidf" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val docs = documents(s, dir)
       // shared posting builder (VERDICT r13 #3) — one tokenize/tf for
       // t10/t12/q88 and (with dl) t11/t13/q89
       val tf = Postings.build(docs, withDl = false)
@@ -159,7 +124,7 @@ object TextAnalysis extends QueryModule {
     // global sort), with row_number assigned over the 10 survivors only.
     "t11_bm25" -> ((s, dir) => {
       val qterms = Postings.QueryTerms
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val docs = documents(s, dir)
       // shared posting builder (VERDICT r13 #3), query-restricted before
       // the tf groupBy — non-matching postings never shuffle
       val tf = Postings.build(docs, withDl = true,
@@ -188,49 +153,27 @@ object TextAnalysis extends QueryModule {
     // only docs holding a posting whose QUANTIZED score floor(tf·C/df)
     // actually crossed under this step's df transition — hot terms' floors
     // almost never cross, which confines the recompute to the affected set
-    // (see TfIdfState's scaladoc for the induction). Replay: 4 insert
-    // epochs (doc_id mod 4) then a retraction epoch deleting doc_id%10==3;
-    // the integrated −old/+new output must equal the batch top-term query
-    // over the surviving corpus. Per-epoch bucket spans are threaded from
-    // ONE job over the pinned postings (the d31 CDC discipline); the only
-    // per-step discovery job is the affected-doc span — the data-dependent
-    // pruning output itself.
+    // (see TfIdfState's scaladoc for the induction). Replay: the shared CDC
+    // script (CdcReplay.Full — 4 insert epochs on doc_id mod 4, then a
+    // retraction epoch deleting doc_id%10==3); the integrated −old/+new
+    // output must equal the batch top-term query over the surviving corpus.
+    // Per-epoch bucket spans are threaded from ONE job over the pinned
+    // postings (the d31 CDC discipline); the only per-step discovery job is
+    // the affected-doc span — the data-dependent pruning output itself.
     "t12_inc_tfidf" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      val E = 4
       val nB = 32
-      val tfAll = Postings.build(
-          t(s, dir, "documents").select(col("doc_id"), col("text")),
-          withDl = false)
-        .localCheckpoint(true)
-      val st = new graft.incremental.TfIdfState(
-        ZSetFrame.fromTable(tfAll.where(lit(false))), nB)
-      // one job: every epoch's term- and doc-bucket span over the pinned
-      // postings (insert epoch = doc_id mod E; retraction = doc_id%10==3)
-      val spans = tfAll.select(
-          pmod(col("doc_id"), lit(E)).cast("int").as("ie"),
-          (pmod(col("doc_id"), lit(10)) === 3).as("ret"),
-          pmod(hash(col("term")), lit(nB)).as("tb"),
-          pmod(hash(col("doc_id")), lit(nB)).as("db"))
+      val tfAll = pinnedPostings(documents(s, dir), withDl = false)
+      val spans = CdcReplay.Full(tfAll).select(col("slice").cast("int"),
+          KeyedState.bucketOf(Seq(col("term")), nB),
+          KeyedState.bucketOf(Seq(col("doc_id")), nB))
         .distinct().collect()
-      def tb(f: org.apache.spark.sql.Row => Boolean): Seq[Int] =
-        spans.filter(f).map(_.getInt(2)).distinct.sorted.toSeq
-      def db(f: org.apache.spark.sql.Row => Boolean): Seq[Int] =
-        spans.filter(f).map(_.getInt(3)).distinct.sorted.toSeq
-      val es = new EpochSlices(tfAll, E, 3)
-      val outs =
-        (0 until E).map { i =>
-          st.step(ZSetFrame.fromTable(es.insert(i)),
-            termBuckets = Some(tb(_.getInt(0) == i)),
-            docBuckets = Some(db(_.getInt(0) == i)))
-        } :+
-        st.step(ZSetFrame.fromDelta(
-            es.retract.withColumn(ZSetFrame.W, lit(-1L))),
-          termBuckets = Some(tb(_.getBoolean(1))),
-          docBuckets = Some(db(_.getBoolean(1))))
-      st.close(); es.close()
-      ZSetFrame.sumAll(outs).consolidate.toDF
-        .select("doc_id", "term", "tf", "score_q")
+      def span(slice: Int, c: Int): Option[Seq[Int]] = Some(spans
+        .filter(_.getInt(0) == slice).map(_.getInt(c)).distinct.sorted.toSeq)
+      val st = new TfIdfState(empty(tfAll), nB)
+      CdcReplay.run(CdcReplay.epochs(tfAll, CdcReplay.Full),
+          "doc_id", "term", "tf", "score_q")(st.close()) { (i, d) =>
+        st.step(d, termBuckets = span(i, 1), docBuckets = span(i, 2))
+      }
     }),
 
     // INCREMENTAL BM25 top-k retrieval (t13) — t11's standing ranked query
@@ -241,32 +184,14 @@ object TextAnalysis extends QueryModule {
     // no-shuffle screen of the QUERY-RESTRICTED index (storage = the match
     // set, never the corpus) for quantized floor crossings under the step's
     // (N, T, df) transition, an O(affected) rescore, and O(touched-bucket)
-    // two-level top-k maintenance. Replay mirrors t12: 4 insert epochs
-    // (doc_id mod 4) then a retraction epoch deleting doc_id%10==3; the
+    // two-level top-k maintenance. Replay mirrors t12 (CdcReplay.Full); the
     // integrated −old/+new output must equal t11's batch top-10 over the
     // surviving corpus.
     "t13_inc_bm25" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      val E = 4
-      val nB = 32
-      val qterms = Postings.QueryTerms
-      val tfAll = Postings.build(
-          t(s, dir, "documents").select(col("doc_id"), col("text")),
-          withDl = true)
-        .select("doc_id", "term", "tf", "dl")
-        .localCheckpoint(true)
-      val st = new graft.incremental.Bm25State(
-        ZSetFrame.fromTable(tfAll.where(lit(false))), qterms, nB)
-      val es = new EpochSlices(tfAll, E, 3)
-      val outs =
-        (0 until E).map { i =>
-          st.step(ZSetFrame.fromTable(es.insert(i)))
-        } :+
-        st.step(ZSetFrame.fromDelta(
-          es.retract.withColumn(ZSetFrame.W, lit(-1L))))
-      st.close(); es.close()
-      ZSetFrame.sumAll(outs).consolidate.toDF
-        .select("doc_id", "score_q", "rnk")
+      val tfAll = pinnedPostings(documents(s, dir), withDl = true)
+      val st = new Bm25State(empty(tfAll), Postings.QueryTerms, 32)
+      CdcReplay.run(CdcReplay.epochs(tfAll, CdcReplay.Full),
+        "doc_id", "score_q", "rnk")(st.close())((_, d) => st.step(d))
     }),
 
     // DURABLE RESTART FOR THE SCREENED RETRIEVAL FAMILY (q92, VERDICT r15
@@ -280,58 +205,33 @@ object TextAnalysis extends QueryModule {
     // constants (bit-identical by the screen's exactness induction) — and
     // the replay continues; the integrated output must still equal t13's
     // batch top-10 over the surviving corpus. Recovery loses nothing.
+    // Proportions: what this query certifies is the RESTART boundary
+    // (durable step commits, teardown, re-attach, derived-index rebuild,
+    // post-restore retraction) — a property of the commit machinery, not
+    // of replay length or corpus size; t13 carries the operator at full
+    // scale. HALF corpus (even doc_ids) + 2 insert epochs + the retraction
+    // epoch (CdcReplay.EvenHalf), and 8 state buckets (partitions ∝ data,
+    // Spark's own sizing rule — each durable step pays one fs commit per
+    // touched partition dir, so over-bucketing a small corpus just
+    // multiplies fs ops).
     "q92_durable_bm25" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      val E = 2
       val nB = 8
-      val qterms = Postings.QueryTerms
-      // Proportions: what this query certifies is the RESTART boundary
-      // (durable step commits, teardown, re-attach, derived-index rebuild,
-      // post-restore retraction) — a property of the commit machinery, not
-      // of replay length or corpus size; t13 carries the operator at full
-      // scale. HALF corpus + 2 insert epochs + the retraction epoch, and 8
-      // state buckets (partitions ∝ data, Spark's own sizing rule — each
-      // durable step pays one fs commit per touched partition dir, so
-      // over-bucketing a small corpus just multiplies fs ops).
-      val tfAll = Postings.build(
-          t(s, dir, "documents").select(col("doc_id"), col("text"))
-            .where(pmod(col("doc_id"), lit(2)) === 0),
-          withDl = true)
-        .select("doc_id", "term", "tf", "dl")
-        .localCheckpoint(true)
+      val tfAll = pinnedPostings(
+        documents(s, dir).where(pmod(col("doc_id"), lit(2)) === 0), withDl = true)
       val path = s"/tmp/graft_durable_q92_${System.nanoTime()}"
-      var st = new graft.incremental.Bm25State(
-        ZSetFrame.fromTable(tfAll.where(lit(false))), qterms, nB,
+      var st = new Bm25State(empty(tfAll), Postings.QueryTerms, nB,
         durablePath = Some(path))
-      val es = new EpochSlices(tfAll, 2 * E, 4)
-      try {
-        // epochs split on EVEN residues (doc_id % 4 = 0 / 2) and the
-        // retraction on doc_id % 10 = 4 — the corpus is even-only, so
-        // odd-selecting predicates would make every post-restore delta
-        // EMPTY and the restart would certify nothing (code-review r16)
-        val outs =
-          (0 until E).map { i =>
-            if (i == 1) { // driver restart point: drop memory, resume from disk
-              st.close()
-              // null BETWEEN close and restore (ADVICE r16): if restore
-              // throws, the finally below must not close the already-closed
-              // state a second time
-              st = null
-              st = graft.incremental.Bm25State.restore(s, path, qterms, nB)
-            }
-            st.step(ZSetFrame.fromTable(es.insert(2 * i)))
-          } :+
-          st.step(ZSetFrame.fromDelta(
-            es.retract.withColumn(ZSetFrame.W, lit(-1L))))
-        // step outputs are eagerly checkpointed by the state — the lazy
-        // integration below stays valid after close() and the dir delete
-        ZSetFrame.sumAll(outs).consolidate.toDF
-          .select("doc_id", "score_q", "rnk")
-      } finally {
-        es.close()
-        if (st != null) st.close()
-        deleteScratchTree(path)
-      }
+      try CdcReplay.run(CdcReplay.epochs(tfAll, CdcReplay.EvenHalf),
+          "doc_id", "score_q", "rnk")(if (st != null) st.close()) { (i, d) =>
+        if (i == 2) { // driver restart point: drop memory, resume from disk
+          st.close()
+          // null BETWEEN close and restore (ADVICE r16): if restore throws,
+          // the replay must not close the already-closed state again
+          st = null
+          st = Bm25State.restore(s, path, Postings.QueryTerms, nB)
+        }
+        st.step(d)
+      } finally deleteScratchTree(path)
     }),
 
     // DURABLE RESTART FOR THE TF-IDF SCREENED STATE (q94, VERDICT r16 #4
@@ -347,41 +247,23 @@ object TextAnalysis extends QueryModule {
     // screen's exactness induction) — and the replay continues; the
     // integrated output must still equal t12's batch top-term query over
     // the surviving corpus. Proportions mirror q92's (the restart
-    // boundary is the property, not replay length): half corpus, 2 insert
-    // epochs on even residues + the doc_id%10==4 retraction, 8 buckets.
+    // boundary is the property, not replay length): half corpus, the
+    // CdcReplay.EvenHalf script, 8 buckets.
     "q94_durable_tfidf" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      val E = 2
       val nB = 8
-      val tfAll = Postings.build(
-          t(s, dir, "documents").select(col("doc_id"), col("text"))
-            .where(pmod(col("doc_id"), lit(2)) === 0),
-          withDl = false)
-        .localCheckpoint(true)
+      val tfAll = pinnedPostings(
+        documents(s, dir).where(pmod(col("doc_id"), lit(2)) === 0), withDl = false)
       val path = s"/tmp/graft_durable_q94_${System.nanoTime()}"
-      var st = new graft.incremental.TfIdfState(
-        ZSetFrame.fromTable(tfAll.where(lit(false))), nB,
-        durablePath = Some(path))
-      val es = new EpochSlices(tfAll, 2 * E, 4)
-      try {
-        val outs =
-          (0 until E).map { i =>
-            if (i == 1) { // driver restart point: drop memory, resume from disk
-              st.close()
-              st = null // see q92: a throwing restore must not double-close
-              st = graft.incremental.TfIdfState.restore(s, path, nB)
-            }
-            st.step(ZSetFrame.fromTable(es.insert(2 * i)))
-          } :+
-          st.step(ZSetFrame.fromDelta(
-            es.retract.withColumn(ZSetFrame.W, lit(-1L))))
-        ZSetFrame.sumAll(outs).consolidate.toDF
-          .select("doc_id", "term", "tf", "score_q")
-      } finally {
-        es.close()
-        if (st != null) st.close()
-        deleteScratchTree(path)
-      }
+      var st = new TfIdfState(empty(tfAll), nB, durablePath = Some(path))
+      try CdcReplay.run(CdcReplay.epochs(tfAll, CdcReplay.EvenHalf),
+          "doc_id", "term", "tf", "score_q")(if (st != null) st.close()) { (i, d) =>
+        if (i == 2) { // driver restart point: drop memory, resume from disk
+          st.close()
+          st = null // see q92: a throwing restore must not double-close
+          st = TfIdfState.restore(s, path, nB)
+        }
+        st.step(d)
+      } finally deleteScratchTree(path)
     }),
 
     // MULTI-QUERY INCREMENTAL RETRIEVAL (t14, VERDICT r13 #7) — a real
@@ -391,31 +273,14 @@ object TextAnalysis extends QueryModule {
     // posting trace, one set of corpus constants, and ONE per-step screen
     // (floor crossing is per-posting, query-independent); affected docs
     // fan out to their matching queries through a broadcast
-    // (query_id, term) dimension. Replay mirrors t13: 4 insert epochs then
-    // the doc_id%10==3 retraction epoch; the integrated output must equal
-    // the per-query batch top-10 over the surviving corpus.
+    // (query_id, term) dimension. Replay mirrors t13 (CdcReplay.Full); the
+    // integrated output must equal the per-query batch top-10 over the
+    // surviving corpus.
     "t14_multi_bm25" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      val E = 4
-      val nB = 32
-      val tfAll = Postings.build(
-          t(s, dir, "documents").select(col("doc_id"), col("text")),
-          withDl = true)
-        .select("doc_id", "term", "tf", "dl")
-        .localCheckpoint(true)
-      val st = new graft.incremental.MultiBm25State(
-        ZSetFrame.fromTable(tfAll.where(lit(false))),
-        Postings.MultiQuerySets, nB)
-      val es = new EpochSlices(tfAll, E, 3)
-      val outs =
-        (0 until E).map { i =>
-          st.step(ZSetFrame.fromTable(es.insert(i)))
-        } :+
-        st.step(ZSetFrame.fromDelta(
-          es.retract.withColumn(ZSetFrame.W, lit(-1L))))
-      st.close(); es.close()
-      ZSetFrame.sumAll(outs).consolidate.toDF
-        .select("query_id", "doc_id", "score_q", "rnk")
+      val tfAll = pinnedPostings(documents(s, dir), withDl = true)
+      val st = new MultiBm25State(empty(tfAll), Postings.MultiQuerySets, 32)
+      CdcReplay.run(CdcReplay.epochs(tfAll, CdcReplay.Full),
+        "query_id", "doc_id", "score_q", "rnk")(st.close())((_, d) => st.step(d))
     }),
 
     // INCREMENTAL PMI ASSOCIATION SCORE (t15, VERDICT r14 #4 — the third
@@ -426,27 +291,13 @@ object TextAnalysis extends QueryModule {
     // decided on the driver over the ≤C(|U|,2) pair dimension and quiet
     // steps cost ZERO cluster-side screening — the corner that proves the
     // Screened factoring spans the whole coupling spectrum. Replay mirrors
-    // t12: 4 insert epochs (doc_id mod 4) then the doc_id%10==3 retraction
-    // epoch; the integrated −old/+new output must equal the batch per-doc
-    // PMI sum over the surviving corpus.
+    // t12 (CdcReplay.Full); the integrated −old/+new output must equal the
+    // batch per-doc PMI sum over the surviving corpus.
     "t15_inc_pmi" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      val E = 4
-      val trAll = Postings.distinctTerms(
-          t(s, dir, "documents").select(col("doc_id"), col("text")))
-        .localCheckpoint(true)
-      val st = new graft.incremental.PmiState(
-        ZSetFrame.fromTable(trAll.where(lit(false))), Postings.PmiTerms, 32)
-      val es = new EpochSlices(trAll, E, 3)
-      val outs =
-        (0 until E).map { i =>
-          st.step(ZSetFrame.fromTable(es.insert(i)))
-        } :+
-        st.step(ZSetFrame.fromDelta(
-          es.retract.withColumn(ZSetFrame.W, lit(-1L))))
-      st.close(); es.close()
-      ZSetFrame.sumAll(outs).consolidate.toDF
-        .select("doc_id", "n_pairs", "score_q")
+      val trAll = Postings.distinctTerms(documents(s, dir)).localCheckpoint(true)
+      val st = new PmiState(empty(trAll), Postings.PmiTerms, 32)
+      CdcReplay.run(CdcReplay.epochs(trAll, CdcReplay.Full),
+        "doc_id", "n_pairs", "score_q")(st.close())((_, d) => st.step(d))
     }),
 
     // INCREMENTAL TF-IDF COSINE ASSIGNMENT (t16, VERDICT r15 #5 — the
@@ -457,30 +308,14 @@ object TextAnalysis extends QueryModule {
     // DRIVER over the |U| term dimension (the PMI discipline — quiet
     // steps schedule zero cluster-side screening), while the affected set
     // is data-dependent (docs HOLDING a crossed term — the TF-IDF
-    // discipline). Replay mirrors t12: 4 insert epochs (doc_id mod 4)
-    // then the doc_id%10==3 retraction epoch; the integrated −old/+new
-    // output must equal the batch per-doc argmax over the surviving
-    // corpus.
+    // discipline). Replay mirrors t12 (CdcReplay.Full); the integrated
+    // −old/+new output must equal the batch per-doc argmax over the
+    // surviving corpus.
     "t16_inc_cosine" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      val E = 4
-      val tfAll = Postings.build(
-          t(s, dir, "documents").select(col("doc_id"), col("text")),
-          withDl = false)
-        .localCheckpoint(true)
-      val st = new graft.incremental.CosineState(
-        ZSetFrame.fromTable(tfAll.where(lit(false))),
-        Postings.CosineCentroids, 32)
-      val es = new EpochSlices(tfAll, E, 3)
-      val outs =
-        (0 until E).map { i =>
-          st.step(ZSetFrame.fromTable(es.insert(i)))
-        } :+
-        st.step(ZSetFrame.fromDelta(
-          es.retract.withColumn(ZSetFrame.W, lit(-1L))))
-      st.close(); es.close()
-      ZSetFrame.sumAll(outs).consolidate.toDF
-        .select("doc_id", "cid", "cos_q")
+      val tfAll = pinnedPostings(documents(s, dir), withDl = false)
+      val st = new CosineState(empty(tfAll), Postings.CosineCentroids, 32)
+      CdcReplay.run(CdcReplay.epochs(tfAll, CdcReplay.Full),
+        "doc_id", "cid", "cos_q")(st.close())((_, d) => st.step(d))
     }),
 
     // token / char counting

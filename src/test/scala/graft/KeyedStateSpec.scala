@@ -379,4 +379,24 @@ class KeyedStateSpec extends SparkSpec {
     assert(st.view(0 until 4).consolidate.df.count() === 64)
     st.close()
   }
+
+  test("a merge whose delta touches no bucket leaves nothing pinned after close") {
+    // an empty touched span still builds (and pins) a 0-partition segment;
+    // listed under no bucket, it was reachable by neither retirement nor
+    // close() and stayed pinned until the context cleaner happened to GC it
+    val d0 = ZSetFrame.fromDelta(
+      (0L until 8L).map(k => (k, k, 1L)).toDF("k", "v", ZSetFrame.W))
+    val none = Incremental.emptyLike(d0)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // the snapshots hold strong references, so the context cleaner cannot
+    // release an orphaned segment before the check below sees it
+    val st = new KeyedState(Seq("k"), 4, none)
+    val held = Seq(() => st.merge(d0), () => st.merge(none, append = true),
+      () => st.merge(none)).map { m => m(); sc.getPersistentRDDs }
+    st.close()
+    val left = sc.getPersistentRDDs.keySet
+      .intersect(held.flatMap(_.keySet).toSet -- before)
+    assert(left.isEmpty, s"empty-span merges leaked pinned RDDs $left")
+  }
 }
